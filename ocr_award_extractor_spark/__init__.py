@@ -15,6 +15,13 @@ Layout:
     sources/     table loaders + the deterministic web-page fixture generator
     plans/       lineage / resume planning (anti-join against committed splits)
     streaming/   optional Structured Streaming demo of the same extractor
+    zipcache.py  per-task zipimport fix, installed on import (see its docstring)
 """
 
+from . import zipcache as _zipcache
+
 __version__ = "0.1.0"
+
+# Every Python worker that unpickles engine code imports this package, so
+# installing here reaches every worker without a Spark conf.
+_zipcache.install()

@@ -193,8 +193,11 @@ def run_resumable_extraction(
         # (≤ len(splits) rows) and write the lineage append from the
         # collected values — the old spelling ran the read-back aggregate
         # twice (once for the lineage write, once for the rows_written
-        # collect)
-        stats = _split_checksum_rows(spark.read.parquet(data_dir)
+        # collect). The read schema is the written frame's: a batch whose
+        # splits are all empty writes no data file, and before any batch
+        # has written one there is no parquet under data/ to infer from
+        stats = _split_checksum_rows(spark.read.schema(out.schema)
+                                     .parquet(data_dir)
                                      .where(F.col("split_id").isin(splits))
                                      ).collect()
         # the commit point: append the ≤len(splits) lineage rows as one

@@ -3,6 +3,8 @@ assert no duplicate and no missing urls, checksums consistent."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from ocr_award_extractor_spark.plans.lineage import (
@@ -183,3 +185,71 @@ run_resumable_extraction(spark, docs, {repr(str(tmp_path / "out"))},
     assert verify_lineage(spark, out).count() == 0     # checksums clean
     runs = {r["run_id"] for r in committed_splits(spark, out).collect()}
     assert runs == {"killed-run", "resume-run"}        # both runs contributed
+
+
+def test_batch_of_empty_splits_before_any_data(spark, tmp_path):
+    """A first batch whose splits hold no documents writes no data file, so
+    its checksum read-back finds no parquet under data/ to infer a schema
+    from. It must read back zero rows, not fail the job, and the resume
+    must then commit every document."""
+    out = str(tmp_path / "sparse")
+    # every document lands in split 1; the first batch is splits {0, 4}
+    docs = load_fixture(spark, n_docs=40).where(
+        F.pmod(F.xxhash64("url"), F.lit(8)) == 1)
+    want = sorted(r["url"] for r in docs.select("url").collect())
+    assert want
+
+    r1 = run_resumable_extraction(spark, docs, out, "sparse-1",
+                                  n_splits=8, n_batches=4, max_batches=1)
+    assert r1["batches_committed"] == 1
+    assert r1["rows_written"] == 0
+
+    run_resumable_extraction(spark, docs, out, "sparse-2",
+                             n_splits=8, n_batches=4)
+    got = sorted(r["url"] for r in read_committed(spark, out).select("url").collect())
+    assert got == want
+    assert verify_lineage(spark, out).count() == 0
+
+
+def test_resume_from_non_prefix_committed_set(spark, tmp_path):
+    """Overlapped batches commit out of order, so a crash can leave a
+    committed split set with a hole in the middle: a later batch committed
+    while an earlier one had written its data but not its lineage row.
+    Rebuild that state by dropping the middle batch's lineage file (its data
+    files stay, as after such a crash); the resume must recompute exactly
+    the hole, replace the stray data and end complete and audit-clean."""
+    import pyarrow.parquet as pq
+
+    from ocr_award_extractor_spark.plans.lineage import committed_splits
+
+    out = str(tmp_path / "holed")
+    docs = load_fixture(spark, n_docs=120)
+    run_resumable_extraction(spark, docs, out, "overlapped",
+                             n_splits=8, n_batches=4)
+
+    lineage_dir = os.path.join(out, "_lineage")
+    by_seq = {}
+    for name in os.listdir(lineage_dir):
+        if name.endswith(".parquet"):
+            t = pq.read_table(os.path.join(lineage_dir, name))
+            (seq,) = set(t.column("committed_seq").to_pylist())
+            by_seq[seq] = (name, set(t.column("split_id").to_pylist()))
+    assert sorted(by_seq) == [0, 1, 2, 3]
+    name, hole = by_seq[1]
+    os.remove(os.path.join(lineage_dir, name))
+    left = {r["split_id"] for r in committed_splits(spark, out).collect()}
+    assert left == set(range(8)) - hole
+    assert max(left) > min(hole)            # not a prefix of the batch order
+    for split in hole:                      # the uncommitted batch's data stays
+        assert os.listdir(os.path.join(out, "data", f"split_id={split}"))
+
+    r2 = run_resumable_extraction(spark, docs, out, "resume",
+                                  n_splits=8, n_batches=4)
+    assert r2["splits_previously_committed"] == 8 - len(hole)
+    assert r2["batches_committed"] == len(hole)
+
+    urls = [r["url"] for r in read_committed(spark, out).select("url").collect()]
+    assert len(urls) == 120 and len(set(urls)) == 120   # complete, no dupes
+    assert verify_lineage(spark, out).count() == 0
+    runs = {r["split_id"]: r["run_id"] for r in committed_splits(spark, out).collect()}
+    assert {s for s, run in runs.items() if run == "resume"} == hole

@@ -89,3 +89,33 @@ def test_tiered_routing_keeps_null_html_rows(spark):
            for r in extract_documents_tiered(docs, salt_partitions=2,
                                              threshold_bytes=10_000).collect()}
     assert got == {"u://ok": "success", "u://null": "error"}
+
+
+def test_spread_small_scans_spreads_a_small_frame(spark):
+    from ocr_award_extractor_spark.sources.tables import spread_small_scans
+
+    out = spread_small_scans(spark.range(100).coalesce(1), target=8)
+    assert out.rdd.getNumPartitions() == 8
+
+
+def test_spread_small_scans_without_stats_warns_and_keeps_frame(spark, caplog):
+    """A plan whose size estimate the JVM cannot give comes back unchanged,
+    and the skipped spread is logged instead of silently swallowed."""
+    import logging
+
+    from ocr_award_extractor_spark.sources.tables import spread_small_scans
+
+    df = spark.range(100)
+    jdf = df._jdf
+
+    class NoStats:
+        def queryExecution(self):
+            return jdf.noSuchMethod()       # a real Py4J call failure
+
+    df._jdf = NoStats()
+    with caplog.at_level(logging.WARNING,
+                         logger="ocr_award_extractor_spark.sources.tables"):
+        out = spread_small_scans(df, target=8)
+    assert out is df
+    assert [r.levelno for r in caplog.records
+            if "no size estimate" in r.getMessage()] == [logging.WARNING]
